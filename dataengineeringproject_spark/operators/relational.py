@@ -22,7 +22,8 @@ def sessionize(
     order_tiebreak: str | None = None,
 ) -> DataFrame:
     """Gap-based sessionization: a new session starts when the time
-    since the key's previous event exceeds the gap. Implemented as
+    since the key's previous event exceeds the gap, compared in
+    microseconds (a 1800.014 s gap exceeds 30 minutes). Implemented as
     lag → gap flag → running sum (the standard window idiom); ONE
     shuffle on `key`, per-partition sort on ts.
 
@@ -35,7 +36,10 @@ def sessionize(
     prev_ts = F.lag(ts_col).over(w)
     new_sess = F.when(
         prev_ts.isNull()
-        | ((F.unix_timestamp(ts_col) - F.unix_timestamp(prev_ts)) > gap_minutes * 60),
+        | (
+            (F.unix_micros(ts_col) - F.unix_micros(prev_ts))
+            > gap_minutes * 60 * 1_000_000
+        ),
         1,
     ).otherwise(0)
     return df.withColumn(

@@ -15,7 +15,7 @@ from dataengineeringproject_spark.operators.relational import (
     pivot_counts,
     sessionize,
 )
-from dataengineeringproject_spark.registry import register, register_prestage
+from dataengineeringproject_spark.registry import register, register_prestage, staged
 from dataengineeringproject_spark.schemas import load_table, local_df
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -2431,7 +2431,6 @@ def cdc_latest_state_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- merge-on-read CDC compaction --------------------------------------------
 
 _CDC_CUTOFF = "2024-01-21 00:00:00"  # base = first 20 days, deltas = rest
-_CDC_BASE_STAGED: dict[str, str] = {}
 
 
 def _staged_cdc_base(spark: SparkSession, sf_dir: str) -> str:
@@ -2441,33 +2440,29 @@ def _staged_cdc_base(spark: SparkSession, sf_dir: str) -> str:
     MOR, Delta + CDF). In production this file set is what the LAST
     compaction wrote; the query reads it back instead of re-collapsing
     pre-cutoff history."""
-    if sf_dir in _CDC_BASE_STAGED:
-        return _CDC_BASE_STAGED[sf_dir]
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("ts") < F.lit(_CDC_CUTOFF).cast("timestamp")
-    )
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    base = (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("event_type") != "error"))
-        .select(
-            "user_id",
-            F.col("event_type").alias("last_op"),
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("last_ts"),
-            F.round("value", 6).alias("last_value"),
+    def build(path: str) -> str:
+        ev = load_table(spark, sf_dir, "events").filter(
+            F.col("ts") < F.lit(_CDC_CUTOFF).cast("timestamp")
         )
-    )
-    path = tempfile.mkdtemp(prefix="deps_cdc_base_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    base.write.mode("overwrite").parquet(path)
-    _CDC_BASE_STAGED[sf_dir] = path
-    return path
+        w = Window.partitionBy("user_id").orderBy(
+            F.desc("ts"), F.desc("event_id")
+        )
+        base = (
+            ev.withColumn("rn", F.row_number().over(w))
+            .filter((F.col("rn") == 1) & (F.col("event_type") != "error"))
+            .select(
+                "user_id",
+                F.col("event_type").alias("last_op"),
+                F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("last_ts"),
+                F.round("value", 6).alias("last_value"),
+            )
+        )
+        base.write.mode("overwrite").parquet(path)
+        return path
+
+    return staged(sf_dir, ("events",), "cdc_base", build)
 
 
 register_prestage(_staged_cdc_base)
@@ -2536,9 +2531,6 @@ def cdc_merge_on_read_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- STREAMING CDC upsert (foreachBatch MERGE into a keyed gold table) -------
-
-_CDC_STREAM_RESULT: dict[str, str] = {}
-
 
 def _cdc_state_schema(batch_ev: DataFrame):
     """Schema of the CDC state table: the change projection cdc_merge_frames
@@ -2625,67 +2617,56 @@ def streaming_cdc_scd1_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the micro-batch + touched state partitions under AQE), the
     per-trigger cost is O(micro-batch + state), and restart replays
     from the checkpoint against the last committed state version."""
-    if sf_dir in _CDC_STREAM_RESULT:
-        return spark.read.parquet(_CDC_STREAM_RESULT[sf_dir]).filter(
-            F.col("last_op") != "error"
-        ).drop("ts", "event_id", "value")
-    import atexit
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
     from dataengineeringproject_spark.queries.streaming_q import _staged_events
 
-    land = _staged_events(spark, sf_dir)
-    ev = load_table(spark, sf_dir, "events")
-    state_root = tempfile.mkdtemp(prefix="deps_cdc_stream_state_")
-    ckpt = tempfile.mkdtemp(prefix="deps_cdc_stream_ckpt_")
-    for p in (state_root, ckpt):
-        atexit.register(shutil.rmtree, p, ignore_errors=True)
-    state: dict[str, str | None] = {"path": None}
+    def build(root: str) -> str:
+        land = _staged_events(spark, sf_dir)
+        ev = load_table(spark, sf_dir, "events")
+        state_root, ckpt = f"{root}/state", f"{root}/ckpt"
+        state: dict[str, str | None] = {"path": None}
 
-    def _merge(batch_ev: DataFrame, batch_id: int) -> None:
-        prev = (
-            None
-            if state["path"] is None
-            else spark.read.schema(_cdc_state_schema(batch_ev)).parquet(
-                state["path"]
+        def _merge(batch_ev: DataFrame, batch_id: int) -> None:
+            prev = (
+                None
+                if state["path"] is None
+                else spark.read.schema(_cdc_state_schema(batch_ev)).parquet(
+                    state["path"]
+                )
             )
-        )
-        merged = cdc_merge_frames(prev, batch_ev)
-        new_path = f"{state_root}/v{batch_id}"
-        merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
-        # retention runs as part of the commit loop: storage stays
-        # bounded at 2 snapshots (current + one grace copy for
-        # in-flight readers) instead of growing by one per trigger
-        from dataengineeringproject_spark.sources.layout import (
-            vacuum_versions,
+            merged = cdc_merge_frames(prev, batch_ev)
+            new_path = f"{state_root}/v{batch_id}"
+            merged.write.mode("overwrite").parquet(new_path)
+            state["path"] = new_path
+            # retention runs as part of the commit loop: storage stays
+            # bounded at 2 snapshots (current + one grace copy for
+            # in-flight readers) instead of growing by one per trigger
+            from dataengineeringproject_spark.sources.layout import (
+                vacuum_versions,
+            )
+
+            vacuum_versions(state_root, keep=2, current=new_path)
+
+        from dataengineeringproject_spark.queries.streaming_q import (
+            _pinned_shuffle_partitions,
         )
 
-        vacuum_versions(state_root, keep=2, current=new_path)
+        with _pinned_shuffle_partitions(spark, 8):
+            q = (
+                spark.readStream.schema(ev.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(land)
+                .writeStream.foreachBatch(_merge)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        assert state["path"] is not None
+        return state["path"]
 
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
-    )
-
-    with _pinned_shuffle_partitions(spark, 8):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(land)
-            .writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    assert state["path"] is not None
-    _CDC_STREAM_RESULT[sf_dir] = state["path"]
-    return spark.read.parquet(state["path"]).filter(
-        F.col("last_op") != "error"
-    ).drop("ts", "event_id", "value")
+    return spark.read.parquet(
+        staged(sf_dir, ("events",), "cdc_stream", build)
+    ).filter(F.col("last_op") != "error").drop("ts", "event_id", "value")
 
 
 _QB_QS = [("p50", 0.5), ("p95", 0.95), ("p99", 0.99)]
@@ -9102,9 +9083,6 @@ def effective_source_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- STREAMING event transitions (sequence family batch/streaming symmetry) ---------
 
-_ETR_STREAM_RESULT: dict[str, str] = {}
-
-
 @register(
     "streaming_event_transitions",
     oracle="""
@@ -9146,31 +9124,18 @@ def streaming_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     — this is how production sessionizers stitch sequences across
     triggers (Flink keyed state; Spark's own sessionization keeps the
     same dangling-end state)."""
-    if sf_dir in _ETR_STREAM_RESULT:
-        counts = spark.read.parquet(_ETR_STREAM_RESULT[sf_dir])
-    else:
-        import atexit
-        import shutil
-        import tempfile
+    from pyspark.sql import Window
 
-        from pyspark.sql import Window
+    from dataengineeringproject_spark.queries.streaming_q import (
+        _pinned_shuffle_partitions,
+        _staged_events,
+    )
+    from dataengineeringproject_spark.sources.layout import vacuum_versions
 
-        from dataengineeringproject_spark.queries.streaming_q import (
-            _pinned_shuffle_partitions,
-            _staged_events,
-        )
-        from dataengineeringproject_spark.sources.layout import (
-            vacuum_versions,
-        )
-
+    def build(root: str) -> str:
         land = _staged_events(spark, sf_dir)
         ev = load_table(spark, sf_dir, "events")
-        roots = {
-            k: tempfile.mkdtemp(prefix=f"deps_etr_{k}_")
-            for k in ("last", "cnt", "ckpt")
-        }
-        for p in roots.values():
-            atexit.register(shutil.rmtree, p, ignore_errors=True)
+        roots = {k: f"{root}/{k}" for k in ("last", "cnt", "ckpt")}
         st: dict[str, str | None] = {"last": None, "cnt": None}
 
         def _step(batch_ev: DataFrame, batch_id: int) -> None:
@@ -9238,8 +9203,11 @@ def streaming_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
             q.awaitTermination()
-        _ETR_STREAM_RESULT[sf_dir] = st["cnt"]
-        counts = spark.read.parquet(st["cnt"])
+        return st["cnt"]
+
+    counts = spark.read.parquet(
+        staged(sf_dir, ("events",), "etr_stream", build)
+    )
     r = counts.groupBy("cur_type").agg(F.sum("n").alias("tot"))
     return counts.join(F.broadcast(r), "cur_type").select(
         "cur_type",

@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineeringproject_spark.functions import text as X
-from dataengineeringproject_spark.registry import register, register_prestage
+from dataengineeringproject_spark.registry import register, register_prestage, staged
 from dataengineeringproject_spark.schemas import load_table
 
 # Per-source sampling rates (percent kept), default for unlisted sources.
@@ -297,7 +297,6 @@ def _funnel_reason() -> Column:
 # --- STREAMING quality gate (quality family batch/streaming symmetry) --------
 
 _QGATE_SLICES = 3
-_QGATE_LAND: dict[str, str] = {}
 
 
 def _staged_docs_land(spark: SparkSession, sf_dir: str) -> str:
@@ -305,21 +304,16 @@ def _staged_docs_land(spark: SparkSession, sf_dir: str) -> str:
     gate watches ({_QGATE_SLICES} deterministic doc_id-mod slices,
     written oldest-first so FileStreamSource fixes micro-batch order).
     Prestage hook: file ARRIVAL is not part of the gate's cost."""
-    if sf_dir in _QGATE_LAND:
-        return _QGATE_LAND[sf_dir]
-    import atexit
-    import shutil
-    import tempfile
 
-    d = _docs(spark, sf_dir)
-    land = tempfile.mkdtemp(prefix="deps_qgate_land_")
-    atexit.register(shutil.rmtree, land, ignore_errors=True)
-    for i in range(_QGATE_SLICES):
-        d.filter(F.col("doc_id") % _QGATE_SLICES == i).coalesce(
-            1
-        ).write.mode("append").parquet(land)
-    _QGATE_LAND[sf_dir] = land
-    return land
+    def build(land: str) -> str:
+        d = _docs(spark, sf_dir)
+        for i in range(_QGATE_SLICES):
+            d.filter(F.col("doc_id") % _QGATE_SLICES == i).coalesce(
+                1
+            ).write.mode("append").parquet(land)
+        return land
+
+    return staged(sf_dir, ("documents",), "qgate_land", build)
 
 
 register_prestage(_staged_docs_land)
@@ -1145,13 +1139,10 @@ def _fuz_band_min_sql(band: int, row: int) -> str:
     )
 
 
-_FUZ_KEYS_STAGED: dict[tuple, str] = {}
-
-
 def _staged_fuz_keys(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the PRE-CAP rep-level band-key frame — (doc_id,
     pfx, band, bkey), one row per (distinct-prefix representative,
-    band) — ONCE per sf_dir (r13, VERDICT r12 item 4: the per-rep
+    band) — ONCE per corpus generation (r13, VERDICT r12 item 4: the per-rep
     band-key HOF — ~{_LEV_PREFIX - 2} md5 calls per band-row per rep —
     dominated fuzzy_pairs_blocked's 1x time and was recomputed on
     every call, twice per fuzzy_recall_blocked run), returning a
@@ -1167,83 +1158,73 @@ def _staged_fuz_keys(spark: SparkSession, sf_dir: str) -> str:
     is semantics, and tests monkeypatch it), so the staged artifact
     is cap-independent, exactly like _staged_sig_index's band index.
     At 100 TB this is the persisted LSH key table maintained next to
-    the corpus, bucketed by (band, bkey) — now literally. Cache keyed
-    on the source parquet's content fingerprint, not path alone
-    (ADVICE r13); spark.table() requires staging session == query
-    session (one session per process — the driver's and bench's
-    shape, same note as _staged_tokset_wb)."""
-    from dataengineeringproject_spark.registry import source_fingerprint
-
-    ck = source_fingerprint(sf_dir, "documents")
-    if ck in _FUZ_KEYS_STAGED:
-        return _FUZ_KEYS_STAGED[ck]
-    import atexit
-    import shutil
-    import tempfile
+    the corpus, bucketed by (band, bkey) — now literally.
+    spark.table() requires staging session == query session (one
+    session per process — the driver's and bench's shape, same note as
+    _staged_tokset_wb)."""
+    import os
 
     from dataengineeringproject_spark.operators.similarity import (
         ensure_min_parallelism,
     )
 
-    d = ensure_min_parallelism(_docs(spark, sf_dir), "doc_id")
-    pfx = F.substring(
-        F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")),
-        1,
-        _LEV_PREFIX,
-    )
-    reps = (
-        d.select("doc_id", pfx.alias("pfx"))
-        .groupBy("pfx")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
-
-    def _band_min(b: int, r: int) -> str:
-        return (
-            f"array_min(transform(sequence(1, greatest(length(pfx) - 2, 1)), "
-            f"i -> md5(concat('{b}r{r}|', substring(pfx, i, 3)))))"
+    def build(path: str) -> str:
+        d = ensure_min_parallelism(_docs(spark, sf_dir), "doc_id")
+        pfx = F.substring(
+            F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")),
+            1,
+            _LEV_PREFIX,
+        )
+        reps = (
+            d.select("doc_id", pfx.alias("pfx"))
+            .groupBy("pfx")
+            .agg(F.min("doc_id").alias("doc_id"))
         )
 
-    band_keys = [
-        F.expr(
-            "concat("
-            + ", ".join(_band_min(b, r) for r in range(_FUZ_ROWS))
-            + ")"
-        ).alias(f"bkey_{b}")
-        for b in range(_FUZ_BANDS)
-    ]
-    k = reps.select("doc_id", "pfx", *band_keys).select(
-        "doc_id",
-        "pfx",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.col(f"bkey_{b}").alias("bkey"),
-                    )
-                    for b in range(_FUZ_BANDS)
-                ]
+        def _band_min(b: int, r: int) -> str:
+            return (
+                f"array_min(transform(sequence(1, greatest(length(pfx) - 2, 1)), "
+                f"i -> md5(concat('{b}r{r}|', substring(pfx, i, 3)))))"
             )
-        ).alias("bk"),
-    ).select("doc_id", "pfx", "bk.band", "bk.bkey")
-    path = tempfile.mkdtemp(prefix="deps_fuzkeys_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    # content-addressed name (ADVICE r14): unique per source
-    # generation AND per process — see registry.fingerprint_token
-    from dataengineeringproject_spark.registry import fingerprint_token
 
-    name = f"deps_fuz_keys_bk_{fingerprint_token(ck)}"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    (
-        k.write.bucketBy(32, "band", "bkey")
-        .sortBy("band", "bkey", "doc_id")
-        .option("path", path)
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    _FUZ_KEYS_STAGED[ck] = name
-    return name
+        band_keys = [
+            F.expr(
+                "concat("
+                + ", ".join(_band_min(b, r) for r in range(_FUZ_ROWS))
+                + ")"
+            ).alias(f"bkey_{b}")
+            for b in range(_FUZ_BANDS)
+        ]
+        k = reps.select("doc_id", "pfx", *band_keys).select(
+            "doc_id",
+            "pfx",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(b).alias("band"),
+                            F.col(f"bkey_{b}").alias("bkey"),
+                        )
+                        for b in range(_FUZ_BANDS)
+                    ]
+                )
+            ).alias("bk"),
+        ).select("doc_id", "pfx", "bk.band", "bk.bkey")
+        # content-addressed name (ADVICE r14): unique per source
+        # generation — the staging dir's basename, see registry.staged
+        name = os.path.basename(path)
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        (
+            k.write.bucketBy(32, "band", "bkey")
+            .sortBy("band", "bkey", "doc_id")
+            .option("path", path)
+            .mode("overwrite")
+            .format("parquet")
+            .saveAsTable(name)
+        )
+        return name
+
+    return staged(sf_dir, ("documents",), "fuz_keys_bk", build)
 
 
 register_prestage(_staged_fuz_keys)
@@ -1344,7 +1325,7 @@ def fuzzy_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mem = d.select("doc_id", pfx.alias("pfx"))
     # r13 (VERDICT r12 item 4): the pre-cap rep band-key frame comes
-    # from the staged table (_staged_fuz_keys — built once per sf_dir,
+    # from the staged table (_staged_fuz_keys — built once per corpus generation,
     # shared with fuzzy_recall_blocked's second pass), not re-derived
     # via the band-key HOF on every call. reps is recovered from the
     # staged frame's band-0 rows (one row per rep per band, so band 0

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dataengineeringproject_spark.functions.arrays import pair_expand
 from dataengineeringproject_spark.registry import register
 from dataengineeringproject_spark.schemas import load_table
 
@@ -82,11 +83,7 @@ def _baskets(li: DataFrame, item_col: str) -> DataFrame:
 
 # ordered in-set expansions over the sorted per-basket item list:
 # all (sa, sb) with sa < sb, and all (i1, i2, i3) with i1 < i2 < i3.
-_PAIR_EXPAND = (
-    "flatten(transform(items, (x, i) -> "
-    "transform(slice(items, i + 2, size(items)), "
-    "y -> struct(x AS sa, y AS sb))))"
-)
+_PAIR_EXPAND = pair_expand("items", "sa", "sb")
 _TRIPLE_EXPAND = (
     "flatten(transform(items, (x, i) -> "
     "flatten(transform(slice(items, i + 2, size(items)), (y, j) -> "
@@ -925,11 +922,7 @@ def link_prediction_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = (
         baskets.select(
             F.explode(
-                F.expr(
-                    "flatten(transform(items, (x, i) -> "
-                    "transform(slice(items, i + 2, size(items)), "
-                    "y -> struct(x AS sa, y AS sb))))"
-                )
+                F.expr(_PAIR_EXPAND)
             ).alias("pr")
         )
         .select(F.col("pr.sa").alias("sa"), F.col("pr.sb").alias("sb"))
@@ -953,11 +946,7 @@ def link_prediction_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.round(1e9 / F.log(F.col("d"))).cast("long").alias("au"),
             F.explode(
-                F.expr(
-                    "flatten(transform(ns, (x, i) -> "
-                    "transform(slice(ns, i + 2, size(ns)), "
-                    "y -> struct(x AS na, y AS nb))))"
-                )
+                F.expr(pair_expand("ns", "na", "nb"))
             ).alias("pr"),
         )
     )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineeringproject_spark.functions import text as X
+from dataengineeringproject_spark.functions.arrays import pair_expand
 from dataengineeringproject_spark.operators import dedup as D
 from dataengineeringproject_spark.operators import similarity as SIM
 from dataengineeringproject_spark import registry as R
@@ -768,11 +769,6 @@ from dataengineeringproject_spark.queries.curation import (  # noqa: E402
     _staged_docs_land as _staged_gate_stream_land,
 )
 
-_GATE_STREAM_RESULT: dict[str, str] = {}
-# keeper-index dir per sf_dir (the replay-idempotence tests re-drive a
-# trigger against the REAL index of the run that produced the report)
-_GATE_STREAM_IDX: dict[str, str] = {}
-
 
 # The oracle's arrival-order ORDER BY assumes FileStreamSource delivers
 # the staged slices oldest-mod-time-first, which _staged_docs_land pins
@@ -825,101 +821,98 @@ def streaming_corpus_release_gate(
     instead of double-counting; the index delta is localCheckpoint-
     materialized before the write so the scan of the index directory
     can never race its own mutation."""
-    def _report(out_dir: str) -> DataFrame:
-        return (
-            spark.read.parquet(out_dir)
-            .groupBy("source", "status")
-            .agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("n_pii_redacted").cast("long").alias("n_pii_redacted"),
-                F.sum("n_chars_total").cast("long").alias("n_chars_total"),
-            )
+    out, _ = _gate_stream_dirs(spark, sf_dir)
+    return (
+        spark.read.parquet(out)
+        .groupBy("source", "status")
+        .agg(
+            F.sum("n_docs").cast("long").alias("n_docs"),
+            F.sum("n_pii_redacted").cast("long").alias("n_pii_redacted"),
+            F.sum("n_chars_total").cast("long").alias("n_chars_total"),
         )
-
-    if sf_dir in _GATE_STREAM_RESULT:
-        return _report(_GATE_STREAM_RESULT[sf_dir])
-    import atexit
-    import shutil
-    import tempfile
-
-    d = _docs(spark, sf_dir)
-    land = _staged_gate_stream_land(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="deps_gate_stream_out_")
-    idx = tempfile.mkdtemp(prefix="deps_gate_stream_idx_")
-    ckpt = tempfile.mkdtemp(prefix="deps_gate_stream_ckpt_")
-    for p in (out, idx, ckpt):
-        atexit.register(shutil.rmtree, p, ignore_errors=True)
-
-    idx_schema = "dupkey string, keeper bigint"
-    # seed partition b=-1 so the first trigger's partition-discovery
-    # read sees a valid (empty) parquet table rather than a bare
-    # directory; every real trigger writes to b=<batch_id>
-    spark.createDataFrame([], idx_schema).write.mode(
-        "overwrite"
-    ).parquet(f"{idx}/b=-1")
-
-    def _admit(batch_docs: DataFrame, batch_id: int) -> None:
-        # one evaluation of the regex-heavy projection feeds both the
-        # keeper aggregate and the status join
-        g = _gate_doc_frame(batch_docs).localCheckpoint()
-        # prior = index state BEFORE this batch: partition-pruned to
-        # b < batch_id, so a replayed batch never sees its own partial
-        # delta (at-least-once foreachBatch → idempotent recompute)
-        prior = (
-            spark.read.parquet(idx)
-            .filter(F.col("b") < F.lit(int(batch_id)))
-            .select("dupkey", "keeper")
-        )
-        bk = (
-            g.filter(F.col("reason") == "pass")
-            .groupBy("dupkey")
-            .agg(F.min("doc_id").alias("cand"))
-        )
-        labeled = g.join(bk, "dupkey", "left").join(
-            prior, "dupkey", "left"
-        ).select(
-            "source",
-            F.when(F.col("reason") != "pass", F.col("reason"))
-            .when(F.col("keeper").isNotNull(), F.lit("exact_dup"))
-            .when(F.col("doc_id") == F.col("cand"), F.lit("admitted"))
-            .otherwise(F.lit("exact_dup"))
-            .alias("status"),
-            "n_chars",
-            "has_pii",
-        )
-        labeled.groupBy("source", "status").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("has_pii").cast("long").alias("n_pii_redacted"),
-            F.sum("n_chars").cast("long").alias("n_chars_total"),
-        ).write.mode("overwrite").parquet(f"{out}/b={int(batch_id)}")
-        # materialize the delta BEFORE touching the directory it was
-        # computed from (ADVICE r10: never rely on plan-time file
-        # listing to sequence a read-then-append on the same path)
-        newk = (
-            bk.join(prior, "dupkey", "left_anti")
-            .select("dupkey", F.col("cand").cast("long").alias("keeper"))
-            .localCheckpoint()
-        )
-        newk.write.mode("overwrite").parquet(f"{idx}/b={int(batch_id)}")
-
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
     )
 
-    with _pinned_shuffle_partitions(spark, 8):
-        q = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(land)
-            .writeStream.foreachBatch(_admit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+
+def _gate_stream_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Run the release-gate stream once per corpus generation and
+    return its (report log, keeper index) dirs; the replay-idempotence
+    tests re-drive a trigger against the REAL index of the run."""
+
+    def build(root: str) -> tuple[str, str]:
+        d = _docs(spark, sf_dir)
+        land = _staged_gate_stream_land(spark, sf_dir)
+        out, idx, ckpt = (f"{root}/{k}" for k in ("out", "idx", "ckpt"))
+
+        idx_schema = "dupkey string, keeper bigint"
+        # seed partition b=-1 so the first trigger's partition-discovery
+        # read sees a valid (empty) parquet table rather than a bare
+        # directory; every real trigger writes to b=<batch_id>
+        spark.createDataFrame([], idx_schema).write.mode(
+            "overwrite"
+        ).parquet(f"{idx}/b=-1")
+
+        def _admit(batch_docs: DataFrame, batch_id: int) -> None:
+            # one evaluation of the regex-heavy projection feeds both the
+            # keeper aggregate and the status join
+            g = _gate_doc_frame(batch_docs).localCheckpoint()
+            # prior = index state BEFORE this batch: partition-pruned to
+            # b < batch_id, so a replayed batch never sees its own partial
+            # delta (at-least-once foreachBatch → idempotent recompute)
+            prior = (
+                spark.read.parquet(idx)
+                .filter(F.col("b") < F.lit(int(batch_id)))
+                .select("dupkey", "keeper")
+            )
+            bk = (
+                g.filter(F.col("reason") == "pass")
+                .groupBy("dupkey")
+                .agg(F.min("doc_id").alias("cand"))
+            )
+            labeled = g.join(bk, "dupkey", "left").join(
+                prior, "dupkey", "left"
+            ).select(
+                "source",
+                F.when(F.col("reason") != "pass", F.col("reason"))
+                .when(F.col("keeper").isNotNull(), F.lit("exact_dup"))
+                .when(F.col("doc_id") == F.col("cand"), F.lit("admitted"))
+                .otherwise(F.lit("exact_dup"))
+                .alias("status"),
+                "n_chars",
+                "has_pii",
+            )
+            labeled.groupBy("source", "status").agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum("has_pii").cast("long").alias("n_pii_redacted"),
+                F.sum("n_chars").cast("long").alias("n_chars_total"),
+            ).write.mode("overwrite").parquet(f"{out}/b={int(batch_id)}")
+            # materialize the delta BEFORE touching the directory it was
+            # computed from (ADVICE r10: never rely on plan-time file
+            # listing to sequence a read-then-append on the same path)
+            newk = (
+                bk.join(prior, "dupkey", "left_anti")
+                .select("dupkey", F.col("cand").cast("long").alias("keeper"))
+                .localCheckpoint()
+            )
+            newk.write.mode("overwrite").parquet(f"{idx}/b={int(batch_id)}")
+
+        from dataengineeringproject_spark.queries.streaming_q import (
+            _pinned_shuffle_partitions,
         )
-        q.awaitTermination()
-    _GATE_STREAM_RESULT[sf_dir] = out
-    _GATE_STREAM_IDX[sf_dir] = idx
-    return _report(out)
+
+        with _pinned_shuffle_partitions(spark, 8):
+            q = (
+                spark.readStream.schema(d.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(land)
+                .writeStream.foreachBatch(_admit)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return out, idx
+
+    return R.staged(sf_dir, ("documents",), "gate_stream", build)
 
 
 # --- NEAR-dup-aware release gate (funnel + LSH clusters + PII composed) ------
@@ -1286,9 +1279,6 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- incremental NEAR-dup dedup (batch vs persisted signature index) ---------
 
-_SIG_INDEX_STAGED: dict[str, str] = {}
-
-
 def _incr_bucket_sql(col: str) -> str:
     """DuckDB expr: the deterministic 0-99 split bucket of a doc id."""
     return f"{X.token_hash_sql(f'CAST({col} AS VARCHAR)', seed=_INCR_SEED)} % 100"
@@ -1302,7 +1292,7 @@ def _incr_bucket(col: str) -> F.Column:
 def _staged_sig_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the EXISTING corpus's LSH band index — (doc_id,
     band_id, band_key), one row per (doc, band) — to PLAIN PARQUET
-    ONCE per sf_dir, standing in for the persisted signature table a
+    ONCE per corpus generation, standing in for the persisted signature table a
     production deployment maintains next to the corpus; it is appended
     to as batches are accepted, and the corpus text is never
     re-shingled.
@@ -1318,23 +1308,18 @@ def _staged_sig_index(spark: SparkSession, sf_dir: str) -> str:
     At 100 TB the regime only changes if a daily batch outgrows the
     broadcast threshold — the bucketed layout becomes worth re-testing
     then, not before."""
-    if sf_dir in _SIG_INDEX_STAGED:
-        return _SIG_INDEX_STAGED[sf_dir]
-    import atexit
-    import shutil
-    import tempfile
 
-    d = _docs(spark, sf_dir)
-    existing = d.filter(_incr_bucket("doc_id") < _INCR_EXISTING_PCT)
-    sigs = D.minhash_signatures(
-        existing, "doc_id", "text", n_hashes=_N_HASHES, k=_SHINGLE_K
-    )
-    bt = D.band_table(sigs, "doc_id", n_hashes=_N_HASHES, bands=_BANDS)
-    path = tempfile.mkdtemp(prefix="deps_sig_index_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    bt.write.mode("overwrite").parquet(path)
-    _SIG_INDEX_STAGED[sf_dir] = path
-    return path
+    def build(path: str) -> str:
+        d = _docs(spark, sf_dir)
+        existing = d.filter(_incr_bucket("doc_id") < _INCR_EXISTING_PCT)
+        sigs = D.minhash_signatures(
+            existing, "doc_id", "text", n_hashes=_N_HASHES, k=_SHINGLE_K
+        )
+        bt = D.band_table(sigs, "doc_id", n_hashes=_N_HASHES, bands=_BANDS)
+        bt.write.mode("overwrite").parquet(path)
+        return path
+
+    return R.staged(sf_dir, ("documents",), "sig_index", build)
 
 
 register_prestage(_staged_sig_index)
@@ -1422,9 +1407,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- STREAMING incremental near-dup dedup (foreachBatch vs the index) --------
 
-_INCR_STREAM_RESULT: dict[str, str] = {}
 _INCR_STREAM_SLICES = 3
-_INCR_STREAM_LAND: dict[str, str] = {}
 
 
 def _staged_incr_stream_land(spark: SparkSession, sf_dir: str) -> str:
@@ -1433,23 +1416,18 @@ def _staged_incr_stream_land(spark: SparkSession, sf_dir: str) -> str:
     slices, written oldest-first so FileStreamSource fixes micro-batch
     order). Prestage hook: file ARRIVAL is not part of the accept
     loop's cost, so benchmarks stage it in warmup."""
-    if sf_dir in _INCR_STREAM_LAND:
-        return _INCR_STREAM_LAND[sf_dir]
-    import atexit
-    import shutil
-    import tempfile
 
-    batch = _docs(spark, sf_dir).filter(
-        _incr_bucket("doc_id") >= _INCR_EXISTING_PCT
-    )
-    land = tempfile.mkdtemp(prefix="deps_incr_stream_land_")
-    atexit.register(shutil.rmtree, land, ignore_errors=True)
-    for i in range(_INCR_STREAM_SLICES):
-        batch.filter(
-            F.col("doc_id") % _INCR_STREAM_SLICES == i
-        ).coalesce(1).write.mode("append").parquet(land)
-    _INCR_STREAM_LAND[sf_dir] = land
-    return land
+    def build(land: str) -> str:
+        batch = _docs(spark, sf_dir).filter(
+            _incr_bucket("doc_id") >= _INCR_EXISTING_PCT
+        )
+        for i in range(_INCR_STREAM_SLICES):
+            batch.filter(
+                F.col("doc_id") % _INCR_STREAM_SLICES == i
+            ).coalesce(1).write.mode("append").parquet(land)
+        return land
+
+    return R.staged(sf_dir, ("documents",), "incr_stream_land", build)
 
 
 register_prestage(_staged_incr_stream_land)
@@ -1562,53 +1540,52 @@ def streaming_dedup_incremental_minhash(
     O(micro-batch) + O(band collisions), never O(corpus), and state
     lives in the index table, not in stream state stores (restart-safe
     via the checkpoint + idempotent re-append)."""
-    if sf_dir in _INCR_STREAM_RESULT:
-        return spark.read.parquet(_INCR_STREAM_RESULT[sf_dir])
-    import atexit
-    import shutil
-    import tempfile
 
-    d = _docs(spark, sf_dir)
-    pct = _INCR_EXISTING_PCT
+    def build(root: str) -> str:
+        import os
 
-    land = _staged_incr_stream_land(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="deps_incr_stream_out_")
-    accepted = tempfile.mkdtemp(prefix="deps_incr_stream_idx_")
-    ckpt = tempfile.mkdtemp(prefix="deps_incr_stream_ckpt_")
-    for p in (out, accepted, ckpt):
-        atexit.register(shutil.rmtree, p, ignore_errors=True)
+        d = _docs(spark, sf_dir)
+        pct = _INCR_EXISTING_PCT
 
-    corpus_idx = _staged_sig_index(spark, sf_dir)
-    idx_schema = spark.read.parquet(corpus_idx).schema
-    idx_cols = [f.name for f in idx_schema.fields]
+        land = _staged_incr_stream_land(spark, sf_dir)
+        out, accepted, ckpt = (f"{root}/{k}" for k in ("out", "idx", "ckpt"))
+        # the accept step reads the (initially empty) accepted index
+        os.makedirs(accepted)
 
-    def _accept(batch_docs: DataFrame, batch_id: int) -> None:
-        prior = spark.read.schema(idx_schema).parquet(corpus_idx, accepted)
-        pairs, bbands = incr_dedup_accept(prior, batch_docs, d)
-        pairs.write.mode("append").parquet(out)
-        bbands.select(*idx_cols).write.mode("append").parquet(accepted)
+        corpus_idx = _staged_sig_index(spark, sf_dir)
+        idx_schema = spark.read.parquet(corpus_idx).schema
+        idx_cols = [f.name for f in idx_schema.fields]
 
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
-    )
+        def _accept(batch_docs: DataFrame, batch_id: int) -> None:
+            prior = spark.read.schema(idx_schema).parquet(corpus_idx, accepted)
+            pairs, bbands = incr_dedup_accept(prior, batch_docs, d)
+            pairs.write.mode("append").parquet(out)
+            bbands.select(*idx_cols).write.mode("append").parquet(accepted)
 
-    # micro-batches are small (|batch|/{slices} docs); 32-way shuffles
-    # inside foreachBatch are pure task overhead — pin low for the
-    # stream's lifetime, restore after (streaming_q's standard pattern)
-    with _pinned_shuffle_partitions(spark, 8):
-        q = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(land)
-            .filter(_incr_bucket("doc_id") >= pct)
-            .writeStream.foreachBatch(_accept)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        from dataengineeringproject_spark.queries.streaming_q import (
+            _pinned_shuffle_partitions,
         )
-        q.awaitTermination()
-    _INCR_STREAM_RESULT[sf_dir] = out
-    return spark.read.parquet(out)
+
+        # micro-batches are small (|batch|/{slices} docs); 32-way shuffles
+        # inside foreachBatch are pure task overhead — pin low for the
+        # stream's lifetime, restore after (streaming_q's standard pattern)
+        with _pinned_shuffle_partitions(spark, 8):
+            q = (
+                spark.readStream.schema(d.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(land)
+                .filter(_incr_bucket("doc_id") >= pct)
+                .writeStream.foreachBatch(_accept)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return out
+
+    return spark.read.parquet(
+        R.staged(sf_dir, ("documents",), "incr_stream", build)
+    )
 
 
 # --- BM25 ranking + BPE pair statistics (r4) --------------------------------
@@ -2493,12 +2470,9 @@ def bpe_train_apply_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PPJ_T = 0.7          # Jaccard threshold (e-notation in oracle)
 _PPJ_T_SQL = "0.7e0"
 
-_TOKSET_STAGED: dict[tuple, str] = {}
-
-
 def _staged_tokset(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the corpus's distinct (doc_id, w) shingle-posting
-    frame to parquet ONCE per sf_dir (r13, VERDICT r12 item 4: the
+    frame to parquet ONCE per corpus generation (r13, VERDICT r12 item 4: the
     explode+distinct shingle build dominated jaccard's 1x time and was
     recomputed from raw text on every call). Same staging convention
     as _staged_sig_index: in a production deployment this is the
@@ -2507,44 +2481,35 @@ def _staged_tokset(spark: SparkSession, sf_dir: str) -> str:
     co-locates — and rebuilding it per query is exactly the waste the
     staged-artifact discipline exists to avoid. The parquet round-trip
     is value-lossless ((bigint, string) rows), so query output is
-    byte-identical to the inline build.  Cache keyed on the source
-    parquet's content fingerprint, not path alone (ADVICE r13)."""
-    ck = R.source_fingerprint(sf_dir, "documents")
-    if ck in _TOKSET_STAGED:
-        return _TOKSET_STAGED[ck]
-    import atexit
-    import shutil
-    import tempfile
+    byte-identical to the inline build."""
 
-    d = SIM.ensure_min_parallelism(_docs(spark, sf_dir), "doc_id")
-    tokset = d.select(
-        "doc_id", F.explode(D.shingles(F.col("text"), _SHINGLE_K)).alias("w")
-    ).distinct()
-    path = tempfile.mkdtemp(prefix="deps_tokset_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    # Plain parquet, NOT a bucketed table — measured, not assumed: a
-    # doc_id-bucketed+sorted variant (bucketBy(32).sortBy, one file per
-    # bucket, read via spark.table) was tried in r13 and measured
-    # SLOWER at sf0.1 (14.7/17.2 s vs 8.9 s in identical fresh
-    # sessions): the fixed 32-bucket scan pins partitioning and defeats
-    # AQE coalescing, while half the consumers (document frequency,
-    # the posting join) need w-keyed shuffles the doc_id layout cannot
-    # serve. At a real 100 TB deployment the posting table would be
-    # bucketed by `w` FOR the posting join specifically — here the
-    # dominant win is simply not re-shingling the corpus per call.
-    tokset.write.mode("overwrite").parquet(path)
-    _TOKSET_STAGED[ck] = path
-    return path
+    def build(path: str) -> str:
+        d = SIM.ensure_min_parallelism(_docs(spark, sf_dir), "doc_id")
+        tokset = d.select(
+            "doc_id", F.explode(D.shingles(F.col("text"), _SHINGLE_K)).alias("w")
+        ).distinct()
+        # Plain parquet, NOT a bucketed table — measured, not assumed: a
+        # doc_id-bucketed+sorted variant (bucketBy(32).sortBy, one file per
+        # bucket, read via spark.table) was tried in r13 and measured
+        # SLOWER at sf0.1 (14.7/17.2 s vs 8.9 s in identical fresh
+        # sessions): the fixed 32-bucket scan pins partitioning and defeats
+        # AQE coalescing, while half the consumers (document frequency,
+        # the posting join) need w-keyed shuffles the doc_id layout cannot
+        # serve. At a real 100 TB deployment the posting table would be
+        # bucketed by `w` FOR the posting join specifically — here the
+        # dominant win is simply not re-shingling the corpus per call.
+        tokset.write.mode("overwrite").parquet(path)
+        return path
+
+    return R.staged(sf_dir, ("documents",), "tokset", build)
 
 
 register_prestage(_staged_tokset)
 
-_DOCG_STAGED: dict[tuple, str] = {}
-
 
 def _staged_docg(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the doc -> set-hash map — (doc_id, gh: md5 of the
-    sorted shingle set) — to parquet ONCE per sf_dir (r13, second
+    sorted shingle set) — to parquet ONCE per corpus generation (r13, second
     producer split out of jaccard_prefix_filter_join: the collect_list
     + sort + md5 aggregate is a full-corpus shuffle recomputed per
     call, and the frame depends only on content + _SHINGLE_K, exactly
@@ -2554,31 +2519,22 @@ def _staged_docg(spark: SparkSession, sf_dir: str) -> str:
     \\s+ tokenization into a shingle, so two DIFFERENT sets can never
     fuse to one concat string (see jaccard's docstring). In
     production this is the set-fingerprint column of the posting
-    index, maintained alongside it.  Cache keyed on the source
-    parquet's content fingerprint, not path alone (ADVICE r13)."""
-    ck = R.source_fingerprint(sf_dir, "documents")
-    if ck in _DOCG_STAGED:
-        return _DOCG_STAGED[ck]
-    import atexit
-    import shutil
-    import tempfile
+    index, maintained alongside it."""
 
-    tokset_all = spark.read.parquet(_staged_tokset(spark, sf_dir))
-    docg = tokset_all.groupBy("doc_id").agg(
-        F.md5(
-            F.concat_ws("\n", F.array_sort(F.collect_list("w")))
-        ).alias("gh")
-    )
-    path = tempfile.mkdtemp(prefix="deps_docg_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    docg.write.mode("overwrite").parquet(path)
-    _DOCG_STAGED[ck] = path
-    return path
+    def build(path: str) -> str:
+        tokset_all = spark.read.parquet(_staged_tokset(spark, sf_dir))
+        docg = tokset_all.groupBy("doc_id").agg(
+            F.md5(
+                F.concat_ws("\n", F.array_sort(F.collect_list("w")))
+            ).alias("gh")
+        )
+        docg.write.mode("overwrite").parquet(path)
+        return path
+
+    return R.staged(sf_dir, ("documents",), "docg", build)
 
 
 register_prestage(_staged_docg)
-
-_TOKSET_WB_STAGED: dict[tuple, str] = {}
 
 
 def _staged_tokset_wb(spark: SparkSession, sf_dir: str) -> str:
@@ -2608,34 +2564,29 @@ def _staged_tokset_wb(spark: SparkSession, sf_dir: str) -> str:
     At 100 TB this IS the posting-table layout a similarity service
     maintains next to the corpus: bucketed by term so candidate
     generation is a co-located join."""
-    ck = R.source_fingerprint(sf_dir, "documents")
-    if ck in _TOKSET_WB_STAGED:
-        return _TOKSET_WB_STAGED[ck]
-    import atexit
-    import shutil
-    import tempfile
+    import os
 
-    tokset_all = spark.read.parquet(_staged_tokset(spark, sf_dir))
-    docg = spark.read.parquet(_staged_docg(spark, sf_dir))
-    reps = docg.groupBy("gh").agg(F.min("doc_id").alias("doc_id"))
-    # content-addressed name (ADVICE r14): unique per source
-    # generation AND per process, so a shared persistent metastore
-    # can't see two processes claim the same table name
-    name = f"deps_tokset_wb_{R.fingerprint_token(ck)}"
-    path = tempfile.mkdtemp(prefix="deps_tokset_wb_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    (
-        tokset_all.join(reps.select("doc_id"), "doc_id", "left_semi")
-        .write.bucketBy(32, "w")
-        .sortBy("w")
-        .option("path", path)
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    _TOKSET_WB_STAGED[ck] = name
-    return name
+    def build(path: str) -> str:
+        tokset_all = spark.read.parquet(_staged_tokset(spark, sf_dir))
+        docg = spark.read.parquet(_staged_docg(spark, sf_dir))
+        reps = docg.groupBy("gh").agg(F.min("doc_id").alias("doc_id"))
+        # content-addressed name (ADVICE r14): unique per source
+        # generation, so a shared persistent metastore can't see two
+        # processes claim the same table name
+        name = os.path.basename(path)
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        (
+            tokset_all.join(reps.select("doc_id"), "doc_id", "left_semi")
+            .write.bucketBy(32, "w")
+            .sortBy("w")
+            .option("path", path)
+            .mode("overwrite")
+            .format("parquet")
+            .saveAsTable(name)
+        )
+        return name
+
+    return R.staged(sf_dir, ("documents",), "tokset_wb", build)
 
 
 register_prestage(_staged_tokset_wb)
@@ -2724,7 +2675,7 @@ def jaccard_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     intact.
 
     r13 (VERDICT r12 item 4): the posting frame is read from a staged
-    parquet table (_staged_tokset — built once per sf_dir and shared
+    parquet table (_staged_tokset — built once per corpus generation and shared
     across calls), not re-shingled from raw text on every call; the
     parquet round-trip is value-lossless so output is byte-identical.
     (A doc_id-bucketed variant measured slower — see _staged_tokset.)
@@ -4001,11 +3952,7 @@ def corpus_similarity_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("srcs") >= 2)
         .select(
             F.explode(
-                F.expr(
-                    "flatten(transform(srcs, (x, i) -> "
-                    "transform(slice(srcs, i + 2, size(srcs)), "
-                    "y -> struct(x AS sa, y AS sb))))"
-                )
+                F.expr(pair_expand("srcs", "sa", "sb"))
             ).alias("pr")
         )
         .groupBy(

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataengineeringproject_spark.registry import register, register_prestage
+from dataengineeringproject_spark.registry import register, register_prestage, staged
 from dataengineeringproject_spark.session import ensure_package_on_workers
 from dataengineeringproject_spark.sources import pyds
 
@@ -78,37 +78,24 @@ def synth_source_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB from the ORIGINAL parquet. Any precision loss or quoting bug
 # in the CSV lane breaks the hash.
 
-import atexit as _atexit
-import shutil as _shutil
-import tempfile as _tempfile
-
-_CSV_STAGED: dict[str, str] = {}
 _CSV_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 
-@_atexit.register
-def _cleanup_csv_staged() -> None:
-    for d in _CSV_STAGED.values():
-        _shutil.rmtree(d, ignore_errors=True)
-    _CSV_STAGED.clear()
-
-
 def _staged_csv_events(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _CSV_STAGED:
-        return _CSV_STAGED[sf_dir]
     from dataengineeringproject_spark.schemas import load_table
 
-    d = _tempfile.mkdtemp(prefix="deps_csv_events_")
-    (
-        load_table(spark, sf_dir, "events")
-        .select("event_id", "ts", "event_type", "value")
-        .write.mode("overwrite")
-        .option("header", "true")
-        .option("timestampFormat", _CSV_TS_FMT)
-        .csv(d)
-    )
-    _CSV_STAGED[sf_dir] = d
-    return d
+    def build(d: str) -> str:
+        (
+            load_table(spark, sf_dir, "events")
+            .select("event_id", "ts", "event_type", "value")
+            .write.mode("overwrite")
+            .option("header", "true")
+            .option("timestampFormat", _CSV_TS_FMT)
+            .csv(d)
+        )
+        return d
+
+    return staged(sf_dir, ("events",), "csv_events", build)
 
 
 @register(
@@ -150,25 +137,15 @@ def csv_roundtrip_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- JSONL round-trip parity (the LLM-corpus interchange lane) ---------------
 
-_JSONL_STAGED: dict[str, str] = {}
-
-
-@_atexit.register
-def _cleanup_jsonl_staged() -> None:
-    for d in _JSONL_STAGED.values():
-        _shutil.rmtree(d, ignore_errors=True)
-    _JSONL_STAGED.clear()
-
 
 def _staged_jsonl_docs(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _JSONL_STAGED:
-        return _JSONL_STAGED[sf_dir]
     from dataengineeringproject_spark.schemas import load_table
 
-    d = _tempfile.mkdtemp(prefix="deps_jsonl_docs_")
-    load_table(spark, sf_dir, "documents").write.mode("overwrite").json(d)
-    _JSONL_STAGED[sf_dir] = d
-    return d
+    def build(d: str) -> str:
+        load_table(spark, sf_dir, "documents").write.mode("overwrite").json(d)
+        return d
+
+    return staged(sf_dir, ("documents",), "jsonl_docs", build)
 
 
 @register(
@@ -205,30 +182,20 @@ def jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- partitioned-layout read-back (partition pruning under the gate) ---------
 
-_PART_STAGED: dict[str, str] = {}
-
-
-@_atexit.register
-def _cleanup_part_staged() -> None:
-    for d in _PART_STAGED.values():
-        _shutil.rmtree(d, ignore_errors=True)
-    _PART_STAGED.clear()
-
 
 def _staged_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _PART_STAGED:
-        return _PART_STAGED[sf_dir]
     from dataengineeringproject_spark.schemas import load_table
 
-    d = _tempfile.mkdtemp(prefix="deps_part_events_")
-    (
-        load_table(spark, sf_dir, "events")
-        .write.mode("overwrite")
-        .partitionBy("event_type")
-        .parquet(d)
-    )
-    _PART_STAGED[sf_dir] = d
-    return d
+    def build(d: str) -> str:
+        (
+            load_table(spark, sf_dir, "events")
+            .write.mode("overwrite")
+            .partitionBy("event_type")
+            .parquet(d)
+        )
+        return d
+
+    return staged(sf_dir, ("events",), "part_events", build)
 
 
 @register(
@@ -267,15 +234,6 @@ def partition_prune_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- schema-evolution read-back (mergeSchema under the gate) -----------------
 
-_EVOL_STAGED: dict[str, str] = {}
-
-
-@_atexit.register
-def _cleanup_evol_staged() -> None:
-    for d in _EVOL_STAGED.values():
-        _shutil.rmtree(d, ignore_errors=True)
-    _EVOL_STAGED.clear()
-
 
 def _staged_evolved_events(spark: SparkSession, sf_dir: str) -> str:
     """Stage events as a MIXED-SCHEMA parquet directory — the shape a
@@ -283,18 +241,17 @@ def _staged_evolved_events(spark: SparkSession, sf_dir: str) -> str:
     added: the v1 slice (even user_id, standing in for files written
     before the migration) lacks the `props` column entirely; the v2
     slice has the full schema. Files written oldest-schema-first."""
-    if sf_dir in _EVOL_STAGED:
-        return _EVOL_STAGED[sf_dir]
     from dataengineeringproject_spark.schemas import load_table
 
-    ev = load_table(spark, sf_dir, "events")
-    d = _tempfile.mkdtemp(prefix="deps_evol_events_")
-    v1 = ev.filter(F.col("user_id") % 2 == 0).drop("props")
-    v2 = ev.filter(F.col("user_id") % 2 == 1)
-    v1.coalesce(1).write.mode("append").parquet(d)
-    v2.coalesce(1).write.mode("append").parquet(d)
-    _EVOL_STAGED[sf_dir] = d
-    return d
+    def build(d: str) -> str:
+        ev = load_table(spark, sf_dir, "events")
+        v1 = ev.filter(F.col("user_id") % 2 == 0).drop("props")
+        v2 = ev.filter(F.col("user_id") % 2 == 1)
+        v1.coalesce(1).write.mode("append").parquet(d)
+        v2.coalesce(1).write.mode("append").parquet(d)
+        return d
+
+    return staged(sf_dir, ("events",), "evol_events", build)
 
 
 @register(
@@ -335,56 +292,49 @@ def schema_evolution_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- bucketed-layout read-back (shuffle-free join under the gate) ------------
 
-import hashlib as _hashlib
-
-_BUCK_STAGED: dict[str, tuple[str, str]] = {}
-_BUCK_DIRS: list[str] = []
-
-
-@_atexit.register
-def _cleanup_buck_staged() -> None:
-    for d in _BUCK_DIRS:
-        _shutil.rmtree(d, ignore_errors=True)
-    _BUCK_DIRS.clear()
-    _BUCK_STAGED.clear()
-
 
 def _staged_bucketed_ol(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Stage orders and lineitem as EXTERNAL BUCKETED tables (8 buckets
     on the order key, bucket-sorted, one file per bucket) — the layout
     an ingest job would write once so that every downstream join on
-    the order key reuses the write-time shuffle forever."""
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    to, tl = f"deps_buck_orders_{tag}", f"deps_buck_lineitem_{tag}"
-    if (
-        sf_dir in _BUCK_STAGED
-        and spark.catalog.tableExists(to)
-        and spark.catalog.tableExists(tl)
-    ):
-        return to, tl
+    the order key reuses the write-time shuffle forever. The catalog
+    entries live in the session, not the files, so a cached pair whose
+    tables a new session no longer knows is staged again."""
+    import os
+
     from dataengineeringproject_spark.schemas import load_table
     from dataengineeringproject_spark.sources import layout
 
-    d = _tempfile.mkdtemp(prefix="deps_buck_ol_")
-    layout.write_bucketed(
-        load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
-        to,
-        ["o_orderkey"],
-        8,
-        path=f"{d}/orders",
+    def build(d: str) -> tuple[str, str]:
+        base = os.path.basename(d)
+        to, tl = f"{base}_orders", f"{base}_lineitem"
+        layout.write_bucketed(
+            load_table(spark, sf_dir, "orders").select(
+                "o_orderkey", "o_orderpriority"
+            ),
+            to,
+            ["o_orderkey"],
+            8,
+            path=f"{d}/orders",
+        )
+        layout.write_bucketed(
+            load_table(spark, sf_dir, "lineitem").select(
+                "l_orderkey", "l_extendedprice", "l_discount"
+            ),
+            tl,
+            ["l_orderkey"],
+            8,
+            path=f"{d}/lineitem",
+        )
+        return to, tl
+
+    return staged(
+        sf_dir,
+        ("orders", "lineitem"),
+        "buck_ol",
+        build,
+        valid=lambda names: all(map(spark.catalog.tableExists, names)),
     )
-    layout.write_bucketed(
-        load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice", "l_discount"
-        ),
-        tl,
-        ["l_orderkey"],
-        8,
-        path=f"{d}/lineitem",
-    )
-    _BUCK_DIRS.append(d)
-    _BUCK_STAGED[sf_dir] = (to, tl)
-    return to, tl
 
 
 register_prestage(_staged_bucketed_ol)

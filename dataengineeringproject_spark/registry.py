@@ -17,10 +17,12 @@ Conventions (driver contract, __spark_entry__.py):
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+T = TypeVar("T")
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLE: dict[str, str] = {}
@@ -406,42 +408,6 @@ _LAST_GREEN_ROUND: dict[str, int] = {
 # _PRIORITY_R12 retired (all 14 entries green in CORRECTNESS_r12).
 # _PRIORITY_R13 retired (all 7 entries green in CORRECTNESS_r13).
 # _PRIORITY_R14 retired (all 5 entries green in CORRECTNESS_r14).
-# Round-15 explicit priority front-list (VERDICT r14 item 1): the
-# stalest official cohort is the 37-query reference-parity core last
-# checked in r07 (`daily_agg`, `monthly_agg`, `scalar_exprs`, TPC-H
-# q1/q3/q5, streaming trend/drift family, …).  No semantic change is
-# pending at round start, and stalest-first ordering already fronts
-# that cohort, so the pin list starts with only the queries round 15
-# physically touches (added as the round progresses — each must
-# re-earn its driver row on the new plan).  Retire after
-# CORRECTNESS_r15 lands.
-_PRIORITY_R15: list[str] = [
-    # r15 physical change (output-identical, hash-verified at 100x and
-    # oracle-green at sf0.01): the gram-grain exchanges are sized to
-    # the input via explicit repartition when the window estimate
-    # exceeds the session conf (probe_substr_decade_r15.json: 100x
-    # 157 s/OOM -> 78.8 s, decade ratio 18.4x -> ~4x); plan unchanged
-    # at sf<=10x — re-earn the driver row on the new plan:
-    "dedup_substring_exact",
-    # r15 OPTIMIZATION-round physical changes (all output-identical,
-    # hash-verified + oracle-green at sf0.01 AND sf0.1 this round; see
-    # OPTIMIZATION_r15.md and the exp_*_r15.json artifacts) — each
-    # re-earns its driver row on the new plan:
-    # direction-optimizing hop 4 (bottom-up complement count when the
-    # measured frontier fills > 1/2; exp_khop_bottomup_sf01_r15.json):
-    "graph_khop_reach",
-    # shingle projection 4 passes -> 2, self-join -> per-shingle pair
-    # expansion (exp_corpus_sim_sf01_r15.json):
-    "corpus_similarity_minhash",
-    # shared (b,tok) pre-aggregate + pure-JVM cuts literal
-    # (exp_small_plans_sf01_r15.json):
-    "heaps_law_vocab_growth",
-    # offsets literal moved off the Python-RDD-backed createDataFrame
-    # (schemas.local_df) in the shared spatial cell machinery:
-    "spatial_neighbor_join",
-    "dbscan_core_points",
-    "dbscan_clusters",
-]
 # Round-16 (optimization round 2) priority front-list: every query
 # this round physically changes (all output-identical, hash-verified
 # cold A/B + oracle-green at sf0.01 AND sf0.1 — OPTIMIZATION_r16.md,
@@ -568,21 +534,67 @@ def fingerprint_token(ck: tuple) -> str:
 def register_prestage(
     fn: Callable[[SparkSession, str], object],
 ) -> Callable[[SparkSession, str], object]:
-    """Register a one-time staging hook (idempotent per sf_dir).
-
-    Cache-keying convention: hooks staging a table DERIVED from a
-    source parquet should key their in-process cache with
-    source_fingerprint(sf_dir, table) so a regenerated dataset at the
-    same path is re-staged.  Older hooks that key by sf_dir alone
-    assume one generation per process — valid for the driver and
-    bench (testdata is immutable) but a foot-gun for reused fixture
-    dirs (ADVICE r13)."""
+    """Register a one-time staging hook. Hooks stage through `staged`,
+    so running one twice for an unchanged source is a cache hit."""
     _PRESTAGE.append(fn)
     return fn
 
 
+# Staged side tables, landing zones and stream-run results: one cache
+# and one temp root for the whole process (see `staged`).
+_STAGED: dict[tuple, object] = {}
+_STAGE_ROOT: str | None = None
+
+
+def _stage_root() -> str:
+    """The process-wide staging dir, created on first use and removed
+    at interpreter exit."""
+    global _STAGE_ROOT
+    if _STAGE_ROOT is None:
+        import atexit
+        import shutil
+        import tempfile
+
+        _STAGE_ROOT = tempfile.mkdtemp(prefix="deps_staged_")
+        atexit.register(shutil.rmtree, _STAGE_ROOT, ignore_errors=True)
+    return _STAGE_ROOT
+
+
+def staged(
+    sf_dir: str,
+    tables: tuple[str, ...],
+    name: str,
+    build: Callable[[str], T],
+    valid: Callable[[T], bool] | None = None,
+) -> T:
+    """Stage something derived from source `tables` once per source
+    generation and return it.
+
+    The cache key is `name` plus source_fingerprint(sf_dir, t) for each
+    table the staging reads, so regenerating a dataset at the same path
+    re-stages instead of serving a stale copy. Variant flags belong in
+    `name`. On a miss, `build` gets a fresh empty directory
+    `deps_<name>_<token>` under the staging root (token =
+    fingerprint_token of the key) and whatever it returns — a path, a
+    catalog table name, a tuple — is cached. The basename is
+    content-addressed, so a build may use it as a catalog table name.
+    `valid` re-checks a cached value against state the key cannot see
+    (a catalog entry lost with its session); a False rebuilds."""
+    import os
+    import shutil
+
+    key = (name, *(source_fingerprint(sf_dir, t) for t in tables))
+    if key in _STAGED and (valid is None or valid(_STAGED[key])):
+        return _STAGED[key]
+    d = os.path.join(_stage_root(), f"deps_{name}_{fingerprint_token(key)}")
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
+    _STAGED[key] = build(d)
+    return _STAGED[key]
+
+
 def prestage(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Run every staging hook for sf_dir (each caches internally).
+    """Run every staging hook for sf_dir (each stages through `staged`).
 
     Returns per-hook wall seconds so bench artifacts can record
     staging cost alongside per-query rows (ADVICE r13: staged

@@ -162,3 +162,24 @@ def test_bigram_nll_short_docs_drop_not_abort(spark):
         ).alias("b")
     ).collect()
     assert len(bg) == 2  # only the 3-token doc contributes (two bigrams)
+
+
+def test_sessionize_gap_is_microsecond_exact(spark):
+    """A gap 14 ms over 30 minutes opens a new session; a gap exactly
+    30 minutes does not (the oracle compares epoch microseconds)."""
+    from dataengineeringproject_spark.operators import sessionize
+
+    df = spark.createDataFrame(
+        [
+            (1, 1, "2024-01-01 00:00:00.000000"),
+            (1, 2, "2024-01-01 00:30:00.014000"),
+            (2, 3, "2024-01-01 00:00:00.000000"),
+            (2, 4, "2024-01-01 00:30:00.000000"),
+        ],
+        ["user_id", "event_id", "ts"],
+    ).withColumn("ts", F.to_timestamp("ts"))
+    got = {
+        r.event_id: r.session_seq
+        for r in sessionize(df, "user_id", "ts", gap_minutes=30).collect()
+    }
+    assert got == {1: 1, 2: 2, 3: 1, 4: 1}

@@ -46,20 +46,68 @@ def test_source_fingerprint_directory_layout(tmp_path):
     shutil.rmtree(d)
 
 
-def test_staged_caches_keyed_by_fingerprint():
-    """The three r13 staged producers must key their in-process caches
-    by content fingerprint, not bare sf_dir path (ADVICE r13)."""
-    import inspect
+def test_staged_builds_once_per_source_generation(tmp_path):
+    """registry.staged calls `build` once per (name, source
+    generation): a repeat is a cache hit, a rewritten source or a new
+    variant name builds again, and valid() returning False rebuilds."""
+    from dataengineeringproject_spark.registry import staged
 
-    from dataengineeringproject_spark.queries import curation, llm_text
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src = sf / "documents.parquet"
+    src.write_bytes(b"one")
+    calls = []
 
-    for fn in (
-        llm_text._staged_tokset,
-        llm_text._staged_docg,
-        curation._staged_fuz_keys,
-    ):
-        src = inspect.getsource(fn)
-        assert "source_fingerprint" in src, fn.__name__
+    def build(d):
+        assert os.path.isdir(d) and not os.listdir(d)
+        calls.append(d)
+        return d
+
+    def stage(name="probe", **kw):
+        return staged(str(sf), ("documents",), name, build, **kw)
+
+    p1 = stage()
+    assert stage() == p1 and len(calls) == 1
+    src.write_bytes(b"two!")
+    p2 = stage()
+    assert p2 != p1 and len(calls) == 2
+    stage("probe_variant")
+    assert len(calls) == 3
+    assert stage(valid=lambda _: False) == p2 and len(calls) == 4
+
+
+def test_csv_roundtrip_restages_on_source_rewrite(spark, tmp_path):
+    """Rewriting events.parquet at the same path must change
+    csv_roundtrip_daily's answer: the CSV copy is staged per source
+    generation, not per sf_dir path."""
+    from datetime import datetime
+
+    from dataengineeringproject_spark.queries.sources_q import (
+        csv_roundtrip_daily,
+    )
+
+    sf = str(tmp_path)
+
+    def write_events(value):
+        spark.createDataFrame(
+            [
+                (i, datetime(2024, 1, 1, i), 1, "click", value, None)
+                for i in range(3)
+            ],
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        ).coalesce(1).write.mode("overwrite").parquet(f"{sf}/events.parquet")
+
+    def result():
+        return [
+            (r.avg_value, r.n_events)
+            for r in csv_roundtrip_daily(spark, sf).collect()
+        ]
+
+    write_events(1.0)
+    assert result() == [(1.0, 3)]
+    write_events(2.5)
+    assert result() == [(2.5, 3)]
 
 
 def test_prestage_returns_per_hook_timings(spark):

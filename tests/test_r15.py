@@ -59,7 +59,10 @@ def test_staged_tokset_restages_on_source_rewrite(spark, tmp_path):
     """BEHAVIORAL fingerprint-keyed staging (ADVICE r14): stage
     against a tmp fixture, rewrite the source parquet, and assert the
     producer returns a NEW staged artifact — not the stale cache."""
-    from dataengineeringproject_spark.queries.llm_text import _staged_tokset
+    from dataengineeringproject_spark.queries.llm_text import (
+        _staged_docg,
+        _staged_tokset,
+    )
 
     sf = str(tmp_path)
     docs = spark.createDataFrame(
@@ -75,6 +78,8 @@ def test_staged_tokset_restages_on_source_rewrite(spark, tmp_path):
     p2 = _staged_tokset(spark, sf)
     assert p2 != p1
     assert spark.read.parquet(p2).select("doc_id").distinct().count() == 4
+    # the set-hash map derived from it restages with it
+    assert spark.read.parquet(_staged_docg(spark, sf)).count() == 4
 
 
 def test_staged_fuz_keys_table_name_content_addressed(spark, tmp_path):
