@@ -65,7 +65,17 @@ def _reset_stats(df: DataFrame) -> DataFrame:
     Pure JVM (SparkSession.createDataFrame(RDD[Row], schema)): no
     Python-RDD roundtrip, no recomputation (the source is the
     checkpointed RDD), one extra Row<->InternalRow conversion on scan
-    of these few-column long frames."""
+    of these few-column long frames. Needs a classic (JVM-backed)
+    session: a Spark Connect frame has no `_jdf`, so it is refused
+    here with a clear error instead of failing inside py4j."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    if not isinstance(df, ClassicDataFrame):
+        raise TypeError(
+            "connected_components needs a classic (non-Connect) Spark "
+            "session: its stats reset calls the JVM directly; got a "
+            f"{type(df).__module__}.{type(df).__name__}"
+        )
     jdf = df._jdf
     spark = df.sparkSession
     return DataFrame(

@@ -2618,6 +2618,7 @@ def streaming_cdc_scd1_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-trigger cost is O(micro-batch + state), and restart replays
     from the checkpoint against the last committed state version."""
     from dataengineeringproject_spark.queries.streaming_q import _staged_events
+    from dataengineeringproject_spark.streaming.daily import state_partitions
 
     def build(root: str) -> str:
         land = _staged_events(spark, sf_dir)
@@ -2646,11 +2647,7 @@ def streaming_cdc_scd1_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
             vacuum_versions(state_root, keep=2, current=new_path)
 
-        from dataengineeringproject_spark.queries.streaming_q import (
-            _pinned_shuffle_partitions,
-        )
-
-        with _pinned_shuffle_partitions(spark, 8):
+        with state_partitions(spark, land):
             q = (
                 spark.readStream.schema(ev.schema)
                 .option("maxFilesPerTrigger", 1)
@@ -2804,11 +2801,13 @@ def streaming_value_quantiles_binned(
     max are order-insensitive), so this carries the batch twin's full
     value-hash oracle."""
     from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
         _RUN_ID,
         _staged_events,
     )
-    from dataengineeringproject_spark.streaming.daily import run_to_memory
+    from dataengineeringproject_spark.streaming.daily import (
+        run_to_memory,
+        state_partitions,
+    )
 
     ev = load_table(spark, sf_dir, "events")
     land = _staged_events(spark, sf_dir)
@@ -2818,7 +2817,7 @@ def streaming_value_quantiles_binned(
         .withColumn("__one", F.lit(1))
     )
     name = f"vqb_stream_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, land):
         src = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
@@ -9126,10 +9125,8 @@ def streaming_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     same dangling-end state)."""
     from pyspark.sql import Window
 
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
-        _staged_events,
-    )
+    from dataengineeringproject_spark.queries.streaming_q import _staged_events
+    from dataengineeringproject_spark.streaming.daily import state_partitions
     from dataengineeringproject_spark.sources.layout import vacuum_versions
 
     def build(root: str) -> str:
@@ -9192,7 +9189,7 @@ def streaming_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 st[key] = path
                 vacuum_versions(roots[key], keep=2, current=path)
 
-        with _pinned_shuffle_partitions(spark, 8):
+        with state_partitions(spark, land):
             q = (
                 spark.readStream.schema(ev.schema)
                 .option("maxFilesPerTrigger", 1)

@@ -345,16 +345,16 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     live funnel dashboard forever. Converged complete-mode emission
     equals the batch aggregate over the whole corpus — the same full
     value-hash oracle as the batch twin."""
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
-        _RUN_ID,
+    from dataengineeringproject_spark.queries.streaming_q import _RUN_ID
+    from dataengineeringproject_spark.streaming.daily import (
+        run_to_memory,
+        state_partitions,
     )
-    from dataengineeringproject_spark.streaming.daily import run_to_memory
 
     d = _docs(spark, sf_dir)
     land = _staged_docs_land(spark, sf_dir)
     name = f"qgate_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, land):
         src = (
             spark.readStream.schema(d.schema)
             .option("maxFilesPerTrigger", 1)

@@ -20,6 +20,7 @@ from dataengineeringproject_spark.operators import similarity as SIM
 from dataengineeringproject_spark import registry as R
 from dataengineeringproject_spark.registry import register, register_prestage
 from dataengineeringproject_spark.schemas import load_table, local_df
+from dataengineeringproject_spark.streaming.daily import local_bytes, state_partitions
 
 _TOKS = X.tokens_sql("text")
 _N_HASHES, _BANDS, _SHINGLE_K, _NEARDUP_T = 8, 4, 3, 0.5
@@ -895,11 +896,7 @@ def _gate_stream_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             )
             newk.write.mode("overwrite").parquet(f"{idx}/b={int(batch_id)}")
 
-        from dataengineeringproject_spark.queries.streaming_q import (
-            _pinned_shuffle_partitions,
-        )
-
-        with _pinned_shuffle_partitions(spark, 8):
+        with state_partitions(spark, land):
             q = (
                 spark.readStream.schema(d.schema)
                 .option("maxFilesPerTrigger", 1)
@@ -1562,14 +1559,7 @@ def streaming_dedup_incremental_minhash(
             pairs.write.mode("append").parquet(out)
             bbands.select(*idx_cols).write.mode("append").parquet(accepted)
 
-        from dataengineeringproject_spark.queries.streaming_q import (
-            _pinned_shuffle_partitions,
-        )
-
-        # micro-batches are small (|batch|/{slices} docs); 32-way shuffles
-        # inside foreachBatch are pure task overhead — pin low for the
-        # stream's lifetime, restore after (streaming_q's standard pattern)
-        with _pinned_shuffle_partitions(spark, 8):
+        with state_partitions(spark, land):
             q = (
                 spark.readStream.schema(d.schema)
                 .option("maxFilesPerTrigger", 1)
@@ -3567,7 +3557,7 @@ _SSTR_L = 40  # window length = minimum duplicated-span length detected
 # fixture put ~4.5M rows into every concurrently-sorting task — the
 # probe measured 157 s (spill-bound) or a straight executor OOM on
 # the 8g heap, while the same plan at 256 partitions ran 114 s with
-# headroom (tools/probe_substr_decade.py; census proved every
+# headroom (probe_substr_decade_r15.json; census proved every
 # intermediate frame grows exactly ~10.8x per decade, so the 18.4x
 # decade was an execution-regime artifact, not candidate growth).
 # The plan therefore sizes its own gram-grain exchanges: windows are
@@ -3583,20 +3573,8 @@ _SSTR_WINDOWS_PER_BYTE = 2.2
 
 
 def _sstr_gram_parts(spark: SparkSession, sf_dir: str) -> int | None:
-    import os
-
-    p = os.path.join(sf_dir, "documents.parquet")
-    try:
-        if os.path.isdir(p):
-            nbytes = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _dirs, files in os.walk(p)
-                for f in files
-                if not f.startswith("_")
-            )
-        else:
-            nbytes = os.path.getsize(p)
-    except OSError:
+    nbytes = local_bytes(f"{sf_dir}/documents.parquet")
+    if nbytes is None:
         return None  # non-local path (e.g. object store): keep conf
     est_windows = nbytes * _SSTR_WINDOWS_PER_BYTE
     n = int(est_windows // _SSTR_WINDOWS_PER_PART)
@@ -4415,16 +4393,13 @@ def streaming_bm25_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineeringproject_spark.queries.curation import (
         _staged_docs_land,
     )
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
-        _RUN_ID,
-    )
+    from dataengineeringproject_spark.queries.streaming_q import _RUN_ID
     from dataengineeringproject_spark.streaming.daily import run_to_memory
 
     d = _docs(spark, sf_dir)
     land = _staged_docs_land(spark, sf_dir)
     name = f"bm25s_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, land):
         src = (
             spark.readStream.schema(d.schema)
             .option("maxFilesPerTrigger", 1)

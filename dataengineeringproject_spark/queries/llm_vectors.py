@@ -2414,9 +2414,7 @@ def streaming_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids) map-side with one tiny rank shuffle."""
     from pyspark.sql import Window
 
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
-    )
+    from dataengineeringproject_spark.streaming.daily import state_partitions
 
     def build(root: str) -> str:
         cb, land = _staged_ivf_codebook(spark, sf_dir)
@@ -2439,7 +2437,7 @@ def streaming_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             assigned.write.mode("append").parquet(out)
 
-        with _pinned_shuffle_partitions(spark, 8):
+        with state_partitions(spark, land):
             q = (
                 spark.readStream.schema(land_schema)
                 .option("maxFilesPerTrigger", 1)

@@ -271,17 +271,17 @@ def streaming_multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineeringproject_spark.queries.curation import (
         _staged_docs_land,
     )
-    from dataengineeringproject_spark.queries.streaming_q import (
-        _pinned_shuffle_partitions,
-        _RUN_ID,
+    from dataengineeringproject_spark.queries.streaming_q import _RUN_ID
+    from dataengineeringproject_spark.streaming.daily import (
+        run_to_memory,
+        state_partitions,
     )
-    from dataengineeringproject_spark.streaming.daily import run_to_memory
 
     ensure_package_on_workers(spark)
     d = load_table(spark, sf_dir, "documents")
     land = _staged_docs_land(spark, sf_dir)
     name = f"mm_ingest_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, land):
         src = (
             spark.readStream.schema(d.schema)
             .option("maxFilesPerTrigger", 1)

@@ -16,9 +16,7 @@ query.
 
 from __future__ import annotations
 
-import contextlib
 import itertools
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -31,27 +29,11 @@ from dataengineeringproject_spark.streaming.daily import (
     daily_mode_stream,
     read_events_stream,
     run_to_memory,
+    state_partitions,
 )
 
 _RUN_ID = itertools.count()
 _N_FILES = 3
-
-
-@contextlib.contextmanager
-def _pinned_shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
-    """Scoped shuffle-partition pin: stateful streaming allocates one
-    state store per shuffle partition and cannot AQE-coalesce them, so
-    32+ stores for a 30-key state is pure overhead. The previous value
-    is restored on exit so batch queries running later in the same
-    session keep their configured parallelism. (Local-mode pin — a
-    cluster job sizes this per-job.)"""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def _staged_events(
@@ -96,9 +78,11 @@ def _write_landing_zone(
 ) -> str:
     ensure_package_on_workers(spark)
     events = load_table(spark, sf_dir, "events")
-    lo, hi = events.select(
-        F.min("ts").cast("long"), F.max("ts").cast("long")
+    lo_us, hi_us = events.select(
+        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
     ).first()
+    # whole-second slice bounds, as cast("long") floors a timestamp
+    lo, hi = lo_us // 1_000_000, hi_us // 1_000_000
     step = (hi - lo) // _N_FILES + 1
     for i in range(_N_FILES):
         sl = events.filter(
@@ -115,8 +99,7 @@ def _write_landing_zone(
         # reliance on a trailing no-data micro-batch firing). One row
         # per consumed event type so BOTH join sides' event-time moves.
         for n, extra_days in ((1, 40), (3, 80)):
-            mx = events.agg(F.max("ts").alias("ts"))
-            marker = mx.select(
+            marker = spark.range(1).select(
                 F.explode(
                     F.array(
                         F.struct(
@@ -129,7 +112,9 @@ def _write_landing_zone(
                         ),
                     )
                 ).alias("m"),
-                (F.col("ts") + F.expr(f"INTERVAL {extra_days} DAYS")).alias("ts"),
+                F.timestamp_micros(
+                    F.lit(hi_us + extra_days * 86_400_000_000)
+                ).alias("ts"),
             ).select(
                 F.col("m.event_id").alias("event_id"),
                 "ts",
@@ -193,7 +178,7 @@ def streaming_daily_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only exemption."""
     d = _staged_events(spark, sf_dir)
     name = f"daily_mode_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         stream = daily_mode_stream(
             read_events_stream(spark, d, max_files_per_trigger=1)
         )
@@ -216,7 +201,7 @@ def streaming_daily_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-day emission equals the batch aggregate."""
     d = _staged_events(spark, sf_dir)
     name = f"daily_means_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         stream = daily_means_stream(
             read_events_stream(spark, d, max_files_per_trigger=1)
         )
@@ -249,7 +234,7 @@ def streaming_dedup_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir, dups=True)
     name = f"dedup_counts_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         stream = dedup_daily_counts_stream(
             read_events_stream(spark, d, max_files_per_trigger=1)
         )
@@ -287,7 +272,7 @@ def streaming_sliding_means(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"sliding_means_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         stream = sliding_means_stream(
             read_events_stream(spark, d, max_files_per_trigger=1)
         )
@@ -323,7 +308,7 @@ def streaming_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     exemption."""
     d = _staged_events(spark, sf_dir)
     name = f"band_join_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         purchases = (
             read_events_stream(spark, d, max_files_per_trigger=1)
             .filter(F.col("event_type") == "purchase")
@@ -392,7 +377,7 @@ def streaming_static_join_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _staged_events(spark, sf_dir)
     name = f"static_join_q_{next(_RUN_ID)}"
     weights = local_df(spark, _TYPE_WEIGHTS, "event_type string, weight double")
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         ev = read_events_stream(spark, d, max_files_per_trigger=1)
         enriched = ev.join(F.broadcast(weights), "event_type")
         agg = (
@@ -447,7 +432,7 @@ def streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN — full oracle hash check, no rows-only exemption."""
     d = _staged_events(spark, sf_dir, sentinel=True)
     name = f"outer_join_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         # ONE source, self-joined. Two independent readStream instances
         # over the same directory can disagree on per-batch file sets,
         # and the global watermark is the MIN across inputs — one lagging
@@ -532,7 +517,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle row-for-row — full hash check, no rows-only exemption."""
     d = _staged_events(spark, sf_dir, sentinel=True)
     name = f"session_win_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         agg = (
             src.withWatermark("ts", "1 day")
@@ -630,7 +615,7 @@ def streaming_hll_daily_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"hll_daily_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         obs = _hll_bucket_rank(src.select("ts", "user_id"), ["ts"], "user_id")
         agg = (
@@ -702,7 +687,7 @@ def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"cms_hh_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         cells = src.select(
             F.explode(
@@ -814,7 +799,7 @@ def streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"bloom_dedup_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         build = src.filter(
             (F.col("event_type") == "purchase")
@@ -874,7 +859,7 @@ def streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _staged_events(spark, sf_dir)
     name = f"psi_q_{next(_RUN_ID)}"
     _, project = psi_observations(spark, sf_dir)
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         obs = project(src)
         agg = obs.groupBy("event_type", "bin").agg(
@@ -948,7 +933,7 @@ def streaming_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"trend_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         agg = (
             src.withWatermark("ts", "1 day")
@@ -986,7 +971,7 @@ def streaming_seasonal_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"seas_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         agg = (
             src.withWatermark("ts", "1 day")
@@ -1022,7 +1007,7 @@ def streaming_cusum_level_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _staged_events(spark, sf_dir)
     name = f"cusum_q_{next(_RUN_ID)}"
-    with _pinned_shuffle_partitions(spark, 8):
+    with state_partitions(spark, d):
         src = read_events_stream(spark, d, max_files_per_trigger=1)
         agg = (
             src.withWatermark("ts", "1 day")

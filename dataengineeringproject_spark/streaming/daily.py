@@ -27,6 +27,9 @@ upstream of the same transformations.
 
 from __future__ import annotations
 
+import contextlib
+import os
+import re
 from collections.abc import Iterator
 from typing import Any
 
@@ -235,6 +238,67 @@ def run_to_memory(
         .start()
     )
     q.awaitTermination()
+
+
+def local_bytes(path: str) -> int | None:
+    """On-disk bytes of a local parquet file or directory tree, counting
+    the files Spark reads (names starting with '_' or '.' are metadata
+    and checksums). None when the path is not a readable local path,
+    e.g. an object-store URI."""
+    try:
+        if not os.path.isdir(path):
+            return os.path.getsize(path)
+        return sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, files in os.walk(path)
+            for f in files
+            if not f.startswith(("_", "."))
+        )
+    except OSError:
+        return None
+
+
+_BYTE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def _conf_bytes(value: str) -> int:
+    """Spark byte-size string ('67108864b', '64m', '1g') -> bytes."""
+    m = re.fullmatch(r"(\d+)\s*([kmgt]?)b?", value.strip().lower())
+    if m is None:
+        raise ValueError(f"not a Spark byte size: {value!r}")
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
+
+
+@contextlib.contextmanager
+def state_partitions(spark: SparkSession, source_dir: str) -> Iterator[int]:
+    """Size a stream's shuffle partitions from its input for the scope.
+
+    A stateful stream keeps one state store per shuffle partition. It
+    freezes that count into its checkpoint at first start, and AQE
+    cannot coalesce state stores later, so every store pays its commit
+    on every micro-batch however little state it holds. An availableNow
+    run knows its whole input up front, so the scope sets
+    `spark.sql.shuffle.partitions` to
+    ceil(bytes(source_dir) / spark.sql.adaptive.advisoryPartitionSizeInBytes),
+    clamped to [1, the session's current value]: a local landing zone
+    gets one store, a 100 TB one gets the cluster's configured count.
+    A non-local or unreadable `source_dir` keeps the session value. The
+    previous value is restored on exit, so batch queries running later
+    in the same session keep their parallelism. Yields the count."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    n = int(prev)
+    nbytes = local_bytes(source_dir)
+    if nbytes is not None:
+        advisory = _conf_bytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        n = min(n, max(1, -(-nbytes // advisory)))
+    spark.conf.set(key, str(n))
+    try:
+        yield n
+    finally:
+        spark.conf.set(key, prev)
 
 
 def sliding_means_stream(

@@ -220,6 +220,22 @@ def test_cc_chain_converges_within_log_rounds(spark):
     assert all(r.component == 0 for r in rows)
 
 
+def test_reset_stats_refuses_non_classic_frame():
+    """The stats reset reaches into the JVM (`_jdf`,
+    `_jsparkSession`); a frame from any other session type (Spark
+    Connect) must fail with a clear error, not an AttributeError from
+    deep inside the operator."""
+    import pytest
+
+    from dataengineeringproject_spark.operators.graph import _reset_stats
+
+    class ConnectLikeFrame:
+        pass
+
+    with pytest.raises(TypeError, match="classic"):
+        _reset_stats(ConnectLikeFrame())
+
+
 def test_cc_equals_plain_propagation_on_random_graph(spark):
     """Fixpoint identity: compression changes the ROUND COUNT, never
     the labels — compare against plain propagation on a deterministic

@@ -340,16 +340,18 @@ def test_streaming_watermark_drops_late_data(spark, tmp_path):
 
 
 def test_streaming_query_restores_shuffle_partitions(spark):
-    """The registered streaming queries pin shuffle partitions low while
-    the stream runs (one state store per shuffle partition) but must
-    restore the session value afterwards — a leaked pin would skew every
-    batch query that runs later in the same session (ADVICE r1)."""
+    """The registered streaming queries size shuffle partitions from
+    their input while the stream runs (one state store per shuffle
+    partition) but must restore the session value afterwards — a leaked
+    count would skew every batch query that runs later in the same
+    session (ADVICE r1)."""
     from dataengineeringproject_spark.queries import streaming_q
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
     try:
-        spark.conf.set(key, "13")  # distinct from the stream's pin of 8
+        # distinct from the count the stream sizes for its tiny input
+        spark.conf.set(key, "13")
         df = streaming_q.streaming_daily_means(spark, "/root/testdata/sf0.001")
         assert df.count() > 0
         assert spark.conf.get(key) == "13"
@@ -360,6 +362,89 @@ def test_streaming_query_restores_shuffle_partitions(spark):
     d1 = streaming_q._staged_events(spark, "/root/testdata/sf0.001")
     d2 = streaming_q._staged_events(spark, "/root/testdata/sf0.001")
     assert d1 == d2
+
+
+def test_state_partitions_sizes_from_input_bytes(spark, tmp_path):
+    """state_partitions = ceil(input bytes / advisory partition size),
+    clamped to [1, session value]; an unreadable path keeps the session
+    value; the session value comes back on exit, also when the body
+    raises."""
+    from dataengineeringproject_spark.streaming.daily import state_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before, adv_before = spark.conf.get(key), spark.conf.get(adv)
+    try:
+        spark.conf.set(key, "8")
+        tiny = tmp_path / "tiny"
+        tiny.mkdir()
+        (tiny / "part-0.parquet").write_bytes(b"x" * 1024)
+        (tiny / "_SUCCESS").write_bytes(b"")
+        with state_partitions(spark, str(tiny)) as n:
+            assert n == 1
+            assert spark.conf.get(key) == "1"
+        assert spark.conf.get(key) == "8"
+
+        # sparse file of 3 advisory sizes + 1 byte -> 4 partitions
+        spark.conf.set(adv, "1m")
+        big = tmp_path / "big"
+        big.mkdir()
+        with open(big / "part-0.parquet", "wb") as f:
+            f.truncate(3 * 1024 * 1024 + 1)
+        with state_partitions(spark, str(big)) as n:
+            assert n == 4
+        spark.conf.set(key, "2")  # clamped to the session value
+        with state_partitions(spark, str(big)) as n:
+            assert n == 2
+        spark.conf.set(key, "8")
+
+        with state_partitions(spark, str(tmp_path / "missing")) as n:
+            assert n == 8
+        with pytest.raises(RuntimeError, match="body"):
+            with state_partitions(spark, str(tiny)):
+                assert spark.conf.get(key) == "1"
+                raise RuntimeError("body")
+        assert spark.conf.get(key) == "8"
+    finally:
+        spark.conf.set(key, before)
+        spark.conf.set(adv, adv_before)
+
+
+@pytest.mark.parametrize(
+    "query", ["streaming_outer_join", "streaming_daily_mode"]
+)
+def test_sized_state_partitions_match_fixed_eight(spark, query):
+    """A stream sized from its input (1 state partition for sf0.001)
+    returns the same rows as at the fixed 8 it used before: an advisory
+    size of 1 byte makes the scope clamp to the session's 8."""
+    import hashlib
+
+    from conftest import SF_SMOKE as sf
+
+    from dataengineeringproject_spark.queries import streaming_q
+    from dataengineeringproject_spark.streaming.daily import state_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before, adv_before = spark.conf.get(key), spark.conf.get(adv)
+    land = streaming_q._staged_events(
+        spark, sf, sentinel=query == "streaming_outer_join"
+    )
+    digests = {}
+    try:
+        spark.conf.set(key, "8")
+        for advisory, want in (("1b", 8), (adv_before, 1)):
+            spark.conf.set(adv, advisory)
+            with state_partitions(spark, land) as n:
+                assert n == want
+            out = getattr(streaming_q, query)(spark, sf).collect()
+            rows = sorted(repr(tuple(r)) for r in out)
+            digests[want] = hashlib.md5("\n".join(rows).encode()).hexdigest()
+    finally:
+        spark.conf.set(key, before)
+        spark.conf.set(adv, adv_before)
+    assert len(rows) > 0
+    assert digests[1] == digests[8]
 
 
 def test_streaming_incremental_minhash_matches_batch_twin(spark):
